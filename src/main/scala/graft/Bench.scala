@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.GraftSession
 
 /** Benchmark main (driver contract): runs every declared query plus
   * BASELINE.md-aligned stage benchmarks on `SPARK_GRAFT_SF_DIR`, prints ONE
@@ -9,9 +9,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Methodology matches BASELINE.md exactly ("median of 3 runs, warm data"):
   * one untimed warm-up pass (JVM/codegen/page-cache warm-up — "warm data"),
   * then three timed rounds per case, report the per-case MEDIAN. Every case
-  * is forced through a noop write so Catalyst cannot prune the projected
-  * expressions or final sort (`.count()` would time projection queries as
-  * bare scans). Cases run in sorted name order.
+  * is forced by [[graft.core.GraftSession.force]] (a `toRdd` drain), so
+  * Catalyst cannot prune the projected expressions or final sort. Cases
+  * run in sorted name order.
   *
   * Output hygiene (round-1 driver capture truncated the line): timings are
   * rounded to 4 decimals, and the full JSON is ALSO written to the file
@@ -28,26 +28,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Bench {
 
-  // Force = fully evaluate the final plan. `toRdd` drain (count every
-  // InternalRow of the executed plan via one mapPartitions+sum job)
-  // evaluates exactly what the noop write evaluates — same executed plan,
-  // same codegen, no column pruning of the final projection — minus the
-  // V2 write-path commit machinery: an empty one-row action costs 34 ms
-  // drained vs 65 ms noop-written (tools/FloorProbe2), and on the 19-case
-  // q0*/q4* A/B the drain cut a further 1.1 s off the case-major subset
-  // total (7.68 → 6.61 s, ~56 ms/case, no per-case min worse). With ~100
-  // of the 140 cases under a second, that fixed overhead was ~1/10 of
-  // their measured "cost". SPARK_GRAFT_BENCH_FORCE=noop restores the old
-  // path for A/B.
-  private val forceMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_FORCE", "drain")
-  private def force(df: DataFrame): Unit =
-    if (forceMode == "noop") df.write.format("noop").mode("overwrite").save()
-    else {
-      val _ = df.queryExecution.toRdd.mapPartitions { it =>
-        var n = 0L; while (it.hasNext) { it.next(); n += 1 }; Iterator.single(n)
-      }.sum()
-    }
-
   /** 1/5/15-min load averages ("-" off Linux): recorded at bench start and
     * end so a contended machine is visible in the JSON itself.
     */
@@ -62,26 +42,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val loadStart = readLoadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // NOTE: spark.sql.adaptive.coalescePartitions.parallelismFirst stays
-      // at its default (true). The tuning-guide "false" posture was A/B'd
-      // in round 4: it coalesces small-SF sorts/aggregates onto too few
-      // cores and cost +5 s total (q28 +1.4 s, q34 +1.3 s); the advisory-
-      // size posture belongs on a real cluster, not a 32-core bench box
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     import org.apache.spark.sql.functions._
     import graft.core.{GraftFrame, Tables}
+    import GraftSession.force
 
     def li = Tables(spark, sfDir).lineitem
 
@@ -156,18 +121,13 @@ object Bench {
     val timings = scala.collection.mutable.Map.empty[String, List[Double]]
     val errored = scala.collection.mutable.SortedSet.empty[String]
     // CASE-major: a case's 3 timed rounds run back-to-back (warm JIT,
-    // warm page cache, no 139 intervening cases re-polluting either),
-    // instead of the old round-major sweep where round 2 of a case came
-    // ~110 s after round 1 — and how the pandas baseline itself was timed
-    // (3 consecutive repeats). Measured on the 19-case q0*/q4* subset:
-    // medians 10.32 → 7.68 s total under the same noop force (the old
-    // medians were carrying cross-case cache pollution, not query cost),
-    // NO per-case min worse (sum of mins also dropped).
-    // SPARK_GRAFT_BENCH_ORDER=round restores the old order for A/B.
-    val roundMajor = sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("round")
-    val schedule =
-      if (roundMajor) for (r <- 1 to rounds; c <- cases) yield c
-      else for (c <- cases; r <- 1 to rounds) yield c
+    // warm page cache, no 139 intervening cases re-polluting either), as
+    // the pandas baseline itself was timed (3 consecutive repeats). The
+    // old round-major sweep, where round 2 of a case came ~110 s after
+    // round 1, measured 10.32 s vs 7.68 s on the 19-case q0*/q4* subset
+    // (its medians carried cross-case cache pollution, not query cost),
+    // and no case-major per-case min was worse.
+    val schedule = for (c <- cases; _ <- 1 to rounds) yield c
     for ((name, run) <- schedule) {
       val t0 = System.nanoTime()
       // a failed round contributes NO timing (time-to-failure would read as
@@ -226,11 +186,9 @@ object Bench {
     } yield s"""{"pipeline_e2e_median":${r4(pipeMed)},"pipeline_e2e_min":${r4(
         pipeMin)},"baseline_sec":${r4(base)},"ratio_median":${r4(pipeMed / base)},"ratio_min":${r4(
         pipeMin / base)},"bound":2.0,"pass":${pipeMed / base <= 2.0}}""").getOrElse("null")
-    // every appended record names its measurement mode: force (drain|noop)
-    // and order (case|round) both move reported times ~25%+ (ADVICE r12),
-    // so a BENCH.out line must be self-describing or historical trend
-    // comparisons silently mix methodologies
-    val mode = s""""force":"$forceMode","order":"${if (roundMajor) "round" else "case"}""""
+    // every record names its measurement mode, so it stays comparable
+    // with older BENCH.out records timed under a noop force or round order
+    val mode = """"force":"drain","order":"case""""
     val json =
       s"""{"record":"total","metric":"total","value":${r4(total)},"unit":"sec",$mode,"queries":$qs,"mins":$mins,"gate":$gate,"errors":$errs,"loadavg":$load,"sf":"$sfDir"}"""
     val minsLine =

@@ -8,7 +8,7 @@ import graft.core.GraftSession
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(8)
+    val spark = GraftSession.local()
     val df    = SparkEntry.entry(spark)
     df.show(20, truncate = false)
     println(s"rows=${df.count()}")

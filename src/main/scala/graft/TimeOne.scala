@@ -1,39 +1,28 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Single-query timing CLI for plan iteration: runs the named declared
-  * queries under the exact Bench session config (local[32], AQE, 32 shuffle
-  * partitions, noop-write force) and prints one warm-up + per-round wall
+  * queries under Bench's session ([[GraftSession.local]]) and force
+  * ([[GraftSession.force]]) and prints one warm-up + per-round wall
   * times, so a hot spot can be profiled without paying for the full bench
-  * suite.
+  * suite. `SPARK_GRAFT_ROUNDS` sets the timed rounds (default 3).
   */
 object TimeOne {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val sfDir  = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val rounds = sys.env.getOrElse("SPARK_GRAFT_ROUNDS", "3").toInt
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark  = GraftSession.local()
 
-    def force(name: String): Double = {
+    def time(name: String): Double = {
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      GraftSession.force(SparkEntry.queries(name)(spark, sfDir))
       (System.nanoTime() - t0) / 1e9
     }
 
     for (name <- args) {
-      val warm = force(name)
-      val timed = (1 to rounds).map(_ => force(name))
+      val warm = time(name)
+      val timed = (1 to rounds).map(_ => time(name))
       println(
         f"$name%s warm=$warm%.3f " +
           timed.map(t => f"$t%.3f").mkString("rounds=[", ", ", "]") +

@@ -53,8 +53,10 @@ object Jobs {
     * which doubles per-action scheduling overhead on tiny stat plans that
     * have nothing to re-optimize — one exchange, a handful of rows out.
     * Measured 0.25–0.3 s off the e2e pipeline's four stat jobs at sf0.1
-    * ([[graft.tools.AqeProbe]]); corpus-scale queries keep AQE, where it
-    * earns its stages.
+    * (`SPARK_GRAFT_BENCH_ONLY=pipeline_e2e runMain graft.Bench` times the
+    * chain; the AQE on/off A/B is
+    * `git show 376bbd4:src/main/scala/graft/tools/AqeProbe.scala`);
+    * corpus-scale queries keep AQE, where it earns its stages.
     *
     * The plan is re-bound onto a dedicated child session (AQE off) via a
     * per-call global temp view — all public API, and the caller's session

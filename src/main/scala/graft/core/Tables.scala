@@ -127,19 +127,52 @@ object Tables {
     }
 }
 
-/** One place to build a correctly-configured session for CLIs/tests. */
+/** The one session factory and the one force every CLI shares, so
+  * `Explain`, `TimeOne` and `ExecutedPlan` show the plan and the time
+  * that `Bench` measures.
+  */
 object GraftSession {
-  def local(cpus: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+
+  /** Local session over `SPARK_GRAFT_CPUS` threads (default: available
+    * processors), one shuffle partition per thread, AQE on, UTC, no UI.
+    *
+    * `spark.sql.adaptive.coalescePartitions.parallelismFirst` stays at
+    * its default (true): the tuning-guide "false" posture coalesces
+    * small-SF sorts/aggregates onto too few cores and cost +5 s of bench
+    * total when A/B'd (q28 +1.4 s, q34 +1.3 s); the advisory-size posture
+    * belongs on a real cluster, not a single bench box.
+    */
+  def local(): SparkSession = {
+    val cpus = sys.env.getOrElse(
+      "SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
     val s = SparkSession
       .builder()
       .master(s"local[$cpus]")
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Fully evaluate `df`'s final plan: a `toRdd` drain counts every
+    * InternalRow of the executed plan in one mapPartitions+sum job. It
+    * evaluates exactly what a noop write evaluates (same executed plan,
+    * same codegen, no column pruning of the final projection) minus the
+    * V2 write-path commit machinery: an empty one-row action measured
+    * 34 ms drained vs 65 ms noop-written at local[32] (the probe is kept
+    * at `git show 376bbd4:src/main/scala/graft/tools/FloorProbe2.scala`),
+    * and on the 19-case q0 and q4 bench subset the drain cut 7.68 -> 6.61 s
+    * (~56 ms/case, no per-case min worse). `.count()` would instead time
+    * projection queries as bare scans.
+    */
+  def force(df: DataFrame): Unit = {
+    val _ = df.queryExecution.toRdd.mapPartitions { it =>
+      var n = 0L; while (it.hasNext) { it.next(); n += 1 }; Iterator.single(n)
+    }.sum()
   }
 }

@@ -212,9 +212,12 @@ object AnnBuckets {
     * join emits BOTH directions of each pair (a×b with a ≠ b), so
     * consumers get anchor→neighbour rows without a symmetrize explode.
     *
-    * One self-join per table, unioned — deliberately NOT the fused
-    * single-join form ([[candidatePairsFused]]): an A/B at sf10
-    * (n = 200 k, auto bits = 11, tables = 13, `tools/FusionProbe`)
+    * One self-join per table, unioned — deliberately NOT a fused
+    * single join (one `posexplode` under the combined key
+    * `tb = tbl · 2^bits + bucket`, the [[writeBuckets]] layout): an A/B
+    * at sf10 (n = 200 k, auto bits = 11, tables = 13; the probe and the
+    * fused kernel are kept at `git show 376bbd4:src/main/scala/graft/tools/FusionProbe.scala`
+    * and `git show 376bbd4:src/main/scala/graft/llm/AnnBuckets.scala`)
     * measured the per-table union at 94–125 s vs the fused join's
     * 164–174 s for the identical 371 M-pair output, and the fusion
     * regressed production `SemDedup.keepFlagsApprox` 9.8–14.9 s →
@@ -407,47 +410,6 @@ object AnnBuckets {
       .dropDuplicates("a_id", "b_id")
   }
 
-  /** The fused alternative to [[candidatePairs]]: all `nTables` tables
-    * ride ONE self-join via a `posexplode` projection under the combined
-    * key `tb = tbl · 2^bits + bucket` (the [[writeBuckets]] layout). Kept
-    * because the pair-set parity is spec-pinned and the measurement is a
-    * real finding (see [[candidatePairs]]): same output, 1.4–1.8× slower
-    * at sf10 because one exchange sorting nTables·n embedding-carrying
-    * rows costs more than nTables sorts of n rows each. Not used by any
-    * production path.
-    */
-  private[graft] def candidatePairsFused(
-      e: DataFrame,
-      bits: Int,
-      dims: Int,
-      nTables: Int,
-      seed: Long): DataFrame = {
-    val exploded = e.select(
-      posexplode(array((0 until nTables).map(t =>
-        bucketCol(col("emb"), bits, dims, seed + t)): _*)).as(Seq("tbl", "bucket")),
-      col("vec_id"),
-      col("emb"),
-      col("nrm"))
-      .select(
-        (col("tbl") * (1 << bits) + col("bucket")).as("tb"),
-        col("vec_id"),
-        col("emb"),
-        col("nrm"))
-    val a = exploded.select(
-      col("tb"), col("vec_id").as("a_id"), col("emb").as("a_emb"), col("nrm").as("a_nrm"))
-    val b = exploded.select(
-      col("tb"), col("vec_id").as("b_id"), col("emb").as("b_emb"), col("nrm").as("b_nrm"))
-    a.join(b, Seq("tb")).where(col("a_id") =!= col("b_id"))
-      .select(
-        col("a_id"),
-        col("b_id"),
-        round(dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm")), 6).as("cos_sim"))
-      .dropDuplicates("a_id", "b_id")
-  }
-
-  /** One row per (table, bucket) with the combined partition key
-    * `tb = tbl · 2^nBits + bucket`.
-    */
   /** Long-id normalized base projection shared by the persisted-index
     * writer and both query-side bucketings.
     */

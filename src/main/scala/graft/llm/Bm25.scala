@@ -99,13 +99,10 @@ object Bm25 {
     * shape [[topK]] deliberately avoids for a single fixed query becomes
     * the right one when the query SET is itself a table (retrieval
     * evaluation, query mining, batch search): per-term document postings
-    * (term, doc, tf, dl) feed the df side and the contribution join —
-    * with an opt-in `semiFilterTokens` hint that pre-filters the token
-    * stream to the query term set when the caller knows the query terms
-    * are a small fraction of the corpus vocabulary; a
+    * (term, doc, tf, dl) feed the df side and the contribution join (a
     * deployment that searches repeatedly uses
     * [[writePostings]]/[[topKPerQueryIndexed]], the build-once persisted
-    * form, instead — each
+    * form, instead) — each
     * query's DISTINCT terms join them on `term` (a query only ever meets
     * the docs containing its terms, never the corpus), and per-(query,
     * doc) scores rank inside a per-query window. Cost is
@@ -137,9 +134,7 @@ object Bm25 {
       k: Int = 10,
       k1: Double = 1.2,
       b: Double = 0.75,
-      maxTermDf: Option[Long] = None,
-      semiFilterTokens: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      maxTermDf: Option[Long] = None): DataFrame = {
     val tk = split(Cols.q(textCol), " ")
     val tokenRows = docs.select(
       Cols.q(idCol).as("doc_id"),
@@ -155,27 +150,11 @@ object Bm25 {
       // too, so a query id accidentally present twice cannot double its
       // scores (tiny frame — it broadcasts below either way)
       .distinct()
-    // `semiFilterTokens` is a CALLER HINT (r17, adjudicating the r16
-    // regression): when true, the token stream is broadcast-SEMI-filtered
-    // to the query batch's term set BEFORE the tf/df aggregations, so
-    // non-query tokens never ride either exchange — a large win exactly
-    // when the query-term set is small relative to the corpus vocabulary
-    // (selective batch retrieval over a Zipfian corpus). When the query
-    // terms cover most of the vocabulary the filter keeps ~everything and
-    // the two broadcast-probe passes over every token row are pure
-    // overhead — the r16 always-on form measured q141 0.62× / q142 0.59×
-    // in the driver's cold-JVM bench on this shared-~100-term-vocab
-    // fixture, so the default is OFF and the declared queries take the
-    // probe-free plan. The hint is caller-supplied (never a runtime
-    // count, which would cost a job to maybe save part of one); df
-    // semantics are identical either way — the semi-join keeps EVERY
-    // posting of a query term, so the per-term count equals the
-    // full-corpus df for every term that can reach the output.
-    val inTokens =
-      if (semiFilterTokens)
-        tokenRows.join(broadcast(qTerms.select("__term").distinct()), Seq("__term"), "left_semi")
-      else tokenRows
-    val postings = inTokens
+    // No token pre-filter to the query term set: r16's always-on
+    // broadcast-semi filter of the token stream measured q141 0.62× /
+    // q142 0.59× on this shared-vocabulary fixture, where the query terms
+    // cover most of the vocabulary and the probe passes are pure overhead.
+    val postings = tokenRows
       .groupBy("__term", "doc_id", "__dl")
       .agg(count(lit(1)).cast("double").as("__tf"))
     val df = postings.groupBy("__term").agg(count(lit(1)).cast("double").as("__df"))
@@ -297,15 +276,22 @@ object Bm25 {
     * (guide §2.6): Spark's scheduler runs several jobs at once inside one
     * application — actions are only sequential because driver code calls
     * them sequentially — so independent sink writes overlap instead of
-    * paying the per-job floor back to back. Rethrows the first failure.
+    * paying the per-job floor back to back. Rethrows the first failure,
+    * naming the table whose write failed.
     */
-  private def inParallel(tasks: (() => Unit)*): Unit = {
+  private def inParallel(writes: (String, () => Unit)*): Unit = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(writes.size)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val runs = writes.map { case (table, write) =>
+      Future(write()).recover { case e: Throwable =>
+        throw new IllegalStateException(
+          s"postings index write of table '$table' failed: ${e.getMessage}", e)
+      }
+    }
     try {
-      val _ = Await.result(Future.sequence(tasks.map(t => Future(t())).toSeq), Duration.Inf)
+      val _ = Await.result(Future.sequence(runs), Duration.Inf)
     } finally pool.shutdown()
   }
 
@@ -541,7 +527,7 @@ object Bm25 {
         // can be dropped here without ever truncating a kept term's list;
         // the read-time filter over summed dfparts handles terms that
         // cross the cap only in aggregate
-        () =>
+        "postings" -> (() =>
           maxTermDf.fold(postings)(cap => postings.where(col("__df") <= cap))
             .drop("__df") // layout contract: per-generation df lives in dfparts
             .withColumn("src_batch", lit(srcBatch))
@@ -549,9 +535,9 @@ object Bm25 {
             .partitionBy("tb", "src_batch")
             .option("partitionOverwriteMode", overwriteMode)
             .mode("overwrite")
-            .parquet(s"$outDir/postings"),
+            .parquet(s"$outDir/postings")),
         // dfparts keep ALL terms (pre-cap) so reads see true global df
-        () =>
+        "dfparts" -> (() =>
           postings
             .select(col("tb"), col("__term"), col("__df"))
             .distinct()
@@ -560,8 +546,8 @@ object Bm25 {
             .partitionBy("tb", "src_batch")
             .option("partitionOverwriteMode", overwriteMode)
             .mode("overwrite")
-            .parquet(s"$outDir/dfparts"),
-        () =>
+            .parquet(s"$outDir/dfparts")),
+        "stats" -> (() =>
           statsRow
             .withColumn("src_batch", lit(srcBatch))
             .coalesce(1)
@@ -569,7 +555,7 @@ object Bm25 {
             .partitionBy("src_batch")
             .option("partitionOverwriteMode", overwriteMode)
             .mode("overwrite")
-            .parquet(s"$outDir/stats"))
+            .parquet(s"$outDir/stats")))
     } finally postings.unpersist(false)
   }
 

@@ -923,8 +923,9 @@ object SimilarityQueries {
     * with the corpus (the declared q120/q130 clause) — at 2 M vectors
     * it is ~10¹¹ pairs and excluded from the sf10 sweep like them. The
     * production `Auto` sizing holds bucket occupancy (and therefore
-    * per-vector candidate count) constant; `tools/SemDedupProbe
-    * <dir> approxOnly` measures that path at any scale.
+    * per-vector candidate count) constant; the timing probe kept at
+    * `git show 376bbd4:src/main/scala/graft/tools/SemDedupProbe.scala`
+    * (`<dir> approxOnly`) measures that path at any scale.
     */
   val q132SemDedupAnn: Declared = {
     val nBits   = 4

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Times the AUTO-sized ANN paths (LSH + IVF) against the same corpus the
   * declared q41/q50 queries read with their fixed small-scale parameters —
@@ -13,25 +13,14 @@ object AnnScaleBench {
   def main(args: Array[String]): Unit = {
     val sfDir  = args(0)
     val rounds = if (args.length > 1) args(1).toInt else 2
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val emb = graft.core.Tables(spark, sfDir).embeddings
 
     def time(name: String)(mk: => org.apache.spark.sql.DataFrame): Unit = {
       def once(): Double = {
         val t0 = System.nanoTime()
-        mk.write.format("noop").mode("overwrite").save()
+        GraftSession.force(mk)
         (System.nanoTime() - t0) / 1e9
       }
       val warm  = once()

@@ -1,11 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import org.apache.spark.sql.functions._
 
 /** A/B for the persisted near-dup index LAYOUT on the q125 ingest shape
-  * (the [[SigHashBench]] fixture): bootstrap the flat and the banded
-  * index over half the corpus, then time the incremental ingest of the
+  * (the fixture of the signature-hash A/B kept at
+  * `git show 376bbd4:src/main/scala/graft/tools/SigHashBench.scala`):
+  * bootstrap the flat and the banded index over half the corpus, then
+  * time the incremental ingest of the
   * other half (+ planted mutated clones) against each — once as one big
   * batch, once as a stream-sized micro-batch (where partition pruning
   * bites hardest). Asserts both layouts elect identical survivors.
@@ -16,18 +18,7 @@ object BandedIngestBench {
   def main(args: Array[String]): Unit = {
     val dir   = args.headOption.getOrElse("/root/repo/benchdata/sf1")
     val micro = args.lift(1).map(_.toInt).getOrElse(1000)
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import graft.llm.Dedup
 
     val docs  = graft.core.Tables(spark, dir).documents.where(col("text").isNotNull)

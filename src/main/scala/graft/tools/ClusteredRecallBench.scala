@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.core.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,17 +28,7 @@ object ClusteredRecallBench {
     val sampleEvery = args.lift(1).map(_.toLong).getOrElse(199L)
     val maxExact    = args.lift(2).map(_.toLong).getOrElse(25000L)
     val tau         = args.lift(3).map(_.toDouble).getOrElse(0.6)
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")

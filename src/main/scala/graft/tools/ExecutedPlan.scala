@@ -1,10 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
-/** Post-execution plan dump: runs the named declared queries under the
-  * Bench session config and prints `queryExecution.executedPlan` — the
-  * FINAL adaptive plan, where runtime exchange/stage reuse (ReusedExchange,
+/** Post-execution plan dump: runs the named declared queries under Bench's
+  * session and force and prints `queryExecution.executedPlan` — the FINAL
+  * adaptive plan, where runtime exchange/stage reuse (ReusedExchange,
   * repeated ShuffleQueryStage ids) is visible, unlike [[graft.Explain]]'s
   * pre-execution `isFinalPlan=false` view. Evidence tool for shuffle-count
   * claims (r17: the prefix-join shared id-exchange).
@@ -12,23 +12,10 @@ import org.apache.spark.sql.SparkSession
 object ExecutedPlan {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     for (name <- args) {
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      val _ = df.queryExecution.toRdd.mapPartitions { it =>
-        var n = 0L; while (it.hasNext) { it.next(); n += 1 }; Iterator.single(n)
-      }.sum()
+      GraftSession.force(df)
       println(s"\n===== $name (executed) =====")
       println(df.queryExecution.executedPlan.toString)
     }

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.core.GraftSession
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -66,16 +67,7 @@ object GenClusteredEmb {
     val dims      = args.lift(3).map(_.toInt).getOrElse(64)
     val sigma     = args.lift(4).map(_.toDouble).getOrElse(0.4)
     val seed      = args.lift(5).map(_.toLong).getOrElse(2026L)
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     clustered(spark, n, nClusters, dims, sigma, seed)
       .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.core.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,14 +35,7 @@ object GenScale {
     val skew = args.contains("--skew")
     val Array(srcDir, outDir, factorS) = args.filterNot(_ == "--skew")
     val factor = factorS.toInt
-    val spark = SparkSession
-      .builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val copies = spark.range(factor).select(col("id").cast("int").as("__copy"))
 

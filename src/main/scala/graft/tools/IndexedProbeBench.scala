@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.core.GraftSession
 import graft.functions.GraftFunctions.dot
 import graft.llm.AnnBuckets
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -21,17 +22,7 @@ object IndexedProbeBench {
   def main(args: Array[String]): Unit = {
     val dir   = args(0)
     val every = args.lift(1).map(_.toLong).getOrElse(199L)
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.core.GraftSession
 import graft.llm.AnnBuckets
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the LSH occupancy→rebuild loop cost — the BENCH_SF1.md
@@ -22,17 +22,7 @@ object LshRebuildProbe {
     val dir      = args(0)
     val bootFrac = args.lift(1).map(_.toDouble).getOrElse(0.125)
     val batches  = args.lift(2).map(_.toInt).getOrElse(4)
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id").cast("long").as("vec_id"),

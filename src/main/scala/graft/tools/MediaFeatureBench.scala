@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.core.GraftSession
 import graft.multimodal.Multimodal
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures what persisting decoded media features buys — the
@@ -29,17 +29,7 @@ object MediaFeatureBench {
     val dir      = args(0)
     val tau      = args.lift(1).filterNot(_ == "--pairs").map(_.toDouble).getOrElse(0.9)
     val doPairs  = args.contains("--pairs")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val media = Multimodal
       .mediaFromDocuments(spark.read.parquet(s"$dir/documents.parquet"))

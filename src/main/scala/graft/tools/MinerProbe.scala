@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** A/B for the ANN hard-negative miner at a scale dir: the declared
   * q120 pins nBits=4 for oracle reproducibility (the q41/q67 clause);
@@ -10,15 +10,7 @@ import org.apache.spark.sql.SparkSession
 object MinerProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/benchdata/sf1")
-    val spark = SparkSession
-      .builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val emb = graft.core.Tables(spark, dir).embeddings
     // variants: "pinned" (declared q120's nBits=4 — QUADRATIC per bucket,
     // only sane at <= sf1), "auto" (production), "recall" — default all
@@ -29,10 +21,9 @@ object MinerProbe {
     def run(nBits: Int, label: String): Unit = {
       def once(): Double = {
         val t0 = System.nanoTime()
-        graft.llm.EmbeddingStats
-          .hardNegativesApprox(emb, "vec_id", "label", "embedding",
-            tau = 0.3, k = 3, nBits = nBits, nTables = nTables, nProbes = 0)
-          .write.format("noop").mode("overwrite").save()
+        GraftSession.force(graft.llm.EmbeddingStats
+            .hardNegativesApprox(emb, "vec_id", "label", "embedding",
+              tau = 0.3, k = 3, nBits = nBits, nTables = nTables, nProbes = 0))
         (System.nanoTime() - t0) / 1e9
       }
       val warm  = once()
@@ -48,10 +39,9 @@ object MinerProbe {
     if (variants("triplets")) {
       def onceT(): Double = {
         val t0 = System.nanoTime()
-        graft.llm.EmbeddingStats
-          .trainingTripletsApprox(emb, "vec_id", "label", "embedding", tau = 0.3,
-            nBits = graft.llm.AnnBuckets.Auto, nTables = nTables, nProbes = 0)
-          .write.format("noop").mode("overwrite").save()
+        GraftSession.force(graft.llm.EmbeddingStats
+            .trainingTripletsApprox(emb, "vec_id", "label", "embedding", tau = 0.3,
+              nBits = graft.llm.AnnBuckets.Auto, nTables = nTables, nProbes = 0))
         (System.nanoTime() - t0) / 1e9
       }
       val warmA  = onceT()
@@ -61,9 +51,8 @@ object MinerProbe {
     if (variants("tripletsExact")) {
       def onceE(): Double = {
         val t0 = System.nanoTime()
-        graft.llm.EmbeddingStats
-          .trainingTriplets(emb, "vec_id", "label", "embedding", tau = 0.3)
-          .write.format("noop").mode("overwrite").save()
+        GraftSession.force(graft.llm.EmbeddingStats
+            .trainingTriplets(emb, "vec_id", "label", "embedding", tau = 0.3))
         (System.nanoTime() - t0) / 1e9
       }
       val warmE  = onceE()

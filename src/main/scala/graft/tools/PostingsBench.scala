@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.core.GraftSession
 import graft.llm.Bm25
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures what persisting the inverted postings buys — the BENCH_SF1.md
@@ -15,17 +15,7 @@ import org.apache.spark.sql.functions._
 object PostingsBench {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val docs = spark.read.parquet(s"$dir/documents.parquet").localCheckpoint(true)
     val queries = docs.where(col("doc_id") % 25 === 0 && col("doc_id") < 5000).select(

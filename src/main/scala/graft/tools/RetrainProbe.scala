@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.core.GraftSession
 import graft.llm.IvfPq
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the drift→retrain→rebuild loop cost — the BENCH_SF1.md
@@ -18,17 +18,7 @@ object RetrainProbe {
   def main(args: Array[String]): Unit = {
     val dir    = args(0)
     val nCells = args.lift(1).map(_.toInt).getOrElse(64)
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))

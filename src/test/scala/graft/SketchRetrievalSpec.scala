@@ -775,18 +775,20 @@ class SketchRetrievalSpec extends AnyFunSuite {
     }
   }
 
-  test("semiFilterTokens hint never changes multi-query results (r17 gate)") {
-    val docs    = corpus.toDF("doc_id", "text")
-    val queries = Seq((1L, "new the"), (2L, "spark window"), (3L, "lazy dog")).toDF("q_id", "q_text")
-    def rows(semi: Boolean, cap: Option[Long]) = Bm25
-      .topKPerQuery(docs, "doc_id", "text", queries, "q_id", "q_text", k = 5,
-        maxTermDf = cap, semiFilterTokens = semi)
-      .select("q_id", "doc_id", "score", "rn")
-      .as[(Long, Long, Double, Int)].collect().toSeq.sorted
-    assert(rows(semi = true, None) == rows(semi = false, None),
-      "the token semi-filter is a physical hint — identical output required")
-    assert(rows(semi = true, Some(2L)) == rows(semi = false, Some(2L)),
-      "identical under the df cap too (df computed before the cap on both shapes)")
+  test("a failed generational postings write names the table that failed") {
+    val docs = corpus.toDF("doc_id", "text")
+    val dir  = java.nio.file.Files.createTempDirectory("bm25_gen_fail")
+    Bm25.writePostingsGen(docs, "doc_id", "text", dir.toString, nBuckets = 4)
+    // a regular file where the stats table's directory should be: the
+    // append's dynamic-overwrite stats write cannot create its partition
+    val stats = dir.resolve("stats")
+    org.apache.commons.io.FileUtils.deleteDirectory(stats.toFile)
+    java.nio.file.Files.writeString(stats, "not a table")
+    val batch = Seq((6L, "new york pizza")).toDF("doc_id", "text")
+    val e = intercept[IllegalStateException] {
+      Bm25.appendToPostings(dir.toString, batch, "doc_id", "text", srcBatch = 1L)
+    }
+    assert(e.getMessage.contains("table 'stats'"), e.getMessage)
   }
 
   test("observed stats sidecar counts null/empty texts exactly like the standalone aggregate (r17)") {
