@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.core.Cols
+import graft.core.{Cols, Pin}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -276,23 +276,25 @@ object Bm25 {
     * (guide §2.6): Spark's scheduler runs several jobs at once inside one
     * application — actions are only sequential because driver code calls
     * them sequentially — so independent sink writes overlap instead of
-    * paying the per-job floor back to back. Rethrows the first failure,
-    * naming the table whose write failed.
+    * paying the per-job floor back to back. Waits for EVERY write to
+    * finish, then rethrows the first failure in argument order, naming
+    * its table: rethrowing while a sibling still runs would let the
+    * caller release the pin under a write still in flight, and a retry
+    * could race it. No timeout, for the same reason.
     */
   private def inParallel(writes: (String, () => Unit)*): Unit = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val pool = java.util.concurrent.Executors.newFixedThreadPool(writes.size)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    val runs = writes.map { case (table, write) =>
-      Future(write()).recover { case e: Throwable =>
-        throw new IllegalStateException(
-          s"postings index write of table '$table' failed: ${e.getMessage}", e)
-      }
+    val runs = writes.map { case (table, write) => table -> Future(write()) }
+    val outcomes =
+      try runs.map { case (table, run) => table -> Await.ready(run, Duration.Inf).value.get }
+      finally pool.shutdown()
+    outcomes.collectFirst { case (table, scala.util.Failure(e)) =>
+      throw new IllegalStateException(
+        s"postings index write of table '$table' failed: ${e.getMessage}", e)
     }
-    try {
-      val _ = Await.result(Future.sequence(runs), Duration.Inf)
-    } finally pool.shutdown()
   }
 
   /** Build parameters from the meta sidecar, READ BY NAME (a positional
@@ -496,27 +498,19 @@ object Bm25 {
     // table writes run CONCURRENTLY (independent sinks, guide §2.6) so
     // the write chain costs ~the slowest write, not the sum.
     //
-    // The pin is persist(MEMORY_AND_DISK) + eager count, NOT
-    // localCheckpoint (r17, VERDICT/ADVICE r16): persistence keeps the
-    // LINEAGE, so at cluster scale an executor lost mid-build recomputes
-    // its blocks instead of failing the whole job unrecoverably — the
-    // bootstrap pin is corpus-postings-sized, exactly the case where
-    // non-recoverable local checkpoints hurt (batch appends are
-    // batch-bounded either way) — and it is RELEASED before return
-    // instead of living until RDD GC (the streaming-loop accumulation
-    // ADVICE r16 flagged). Partitioning survives the cache, so neither
-    // write re-shuffles.
+    // The pin is scoped, not cut: the bootstrap pin is corpus-postings-
+    // sized, so an executor lost mid-build must recompute its blocks
+    // rather than fail the build. Partitioning survives the cache, so
+    // neither write re-shuffles.
     val spark = docs.sparkSession
     import spark.implicits._
     val obs = org.apache.spark.sql.Observation()
-    val postings = observedPostings(docs, idCol, textCol, obs)
+    Pin.scoped(observedPostings(docs, idCol, textCol, obs)
       .withColumn("tb", termBucket(col("__term"), nBuckets))
       .repartition(col("tb"))
       .withColumn("__df",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy("tb", "__term")).cast("double"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+          .partitionBy("tb", "__term")).cast("double"))) { postings =>
       postings.count() // materialize the pin; fires the stats observation
       val m = observedStats(obs)
       val statsRow = Seq((m("__n").asInstanceOf[Double], Option(m("__dlsum")).map(_.asInstanceOf[Double])))
@@ -556,7 +550,7 @@ object Bm25 {
             .option("partitionOverwriteMode", overwriteMode)
             .mode("overwrite")
             .parquet(s"$outDir/stats")))
-    } finally postings.unpersist(false)
+    }
   }
 
   /** Fail fast (naming the rebuild path) when the postings table lacks

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.core.Cols
+import graft.core.{Cols, Pin}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -33,8 +33,8 @@ import org.apache.spark.sql.functions._
   * Scale shape: a driver loop like [[Mice]]/[[IvfIndex]] — each round is
   * ONE distributed pair-count aggregate (the hoisted
   * [[TextAnalysis.adjacentPairs]] projection, so pair extraction stays
-  * O(tokens) per doc) plus the O(chars) replace, `localCheckpoint`ed so
-  * the plan does not nest one round per merge. Driver state is O(nMerges)
+  * O(tokens) per doc) plus the O(chars) replace, cut so the plan does
+  * not nest one round per merge. Driver state is O(nMerges)
   * merge rows; the corpus never leaves the executors. Rounds are the
   * declared cost: nMerges full passes, the same trade every BPE trainer
   * makes.
@@ -142,7 +142,7 @@ object Bpe {
     * mapPartitions pair count into a per-partition primitive `LongMap`
     * keyed by `(left << 32) | right` — map-side combine without explode
     * or row materialization, shuffling only each partition's distinct
-    * pairs — and (b) ONE greedy int-scan rewrite + localCheckpoint over
+    * pairs — and (b) ONE greedy int-scan rewrite + cut over
     * arrays ~5× smaller than the delimited strings. The previous
     * packed-string kernel ([[trainMergesPacked]], retained as the
     * cross-kernel parity reference) paid a full char-level `replace`
@@ -180,7 +180,7 @@ object Bpe {
     val id2str = scala.collection.mutable.ArrayBuffer.empty[String] ++= base
     val bcVocab = spark.sparkContext.broadcast(str2id)
 
-    var cur = toks
+    var cur = Pin.cut(toks
       .as[Seq[String]]
       .map { tk =>
         val v = bcVocab.value
@@ -188,8 +188,7 @@ object Bpe {
         var i = 0
         tk.foreach { t => e(i) = v(t); i += 1 }
         e
-      }
-      .localCheckpoint(true)
+      })
 
     val merges  = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long, String)]
     var stopped = false
@@ -234,10 +233,13 @@ object Bpe {
         val mergedId = id2str.length
         id2str += (a + " " + b)
         merges += ((m, a, b, maxC, a + " " + b))
-        cur = cur.map(e => mergeScan(e, ai, bi, mergedId)).localCheckpoint(true)
+        val next = Pin.cut(cur.map(e => mergeScan(e, ai, bi, mergedId)))
+        Pin.release(cur)
+        cur = next
         m += 1
       }
     }
+    Pin.release(cur)
     merges.toSeq.toDF("merge_idx", "left", "right", "pair_count", "new_token")
   }
 
@@ -256,7 +258,7 @@ object Bpe {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    var cur = packed(docs, idCol, textCol).localCheckpoint(true)
+    var cur = Pin.cut(packed(docs, idCol, textCol))
 
     val merges  = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long, String)]
     var stopped = false
@@ -276,12 +278,13 @@ object Bpe {
       else {
         val (a, b, c) = (top.head.getString(0), top.head.getString(1), top.head.getLong(2))
         merges += ((m, a, b, c, a + " " + b))
-        cur = cur
-          .select(col("__id"), mergeOnce(col("s"), a, b).as("s"))
-          .localCheckpoint(true)
+        val next = Pin.cut(cur.select(col("__id"), mergeOnce(col("s"), a, b).as("s")))
+        Pin.release(cur)
+        cur = next
         m += 1
       }
     }
+    Pin.release(cur)
     merges.toSeq.toDF("merge_idx", "left", "right", "pair_count", "new_token")
   }
 

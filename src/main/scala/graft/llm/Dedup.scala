@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.core.Cols
+import graft.core.{Cols, Pin}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -253,12 +253,9 @@ object Dedup {
     // (band-candidate join, verification join, election anti-join) — one
     // batch-bounded materialization replaces two repeats of the salted
     // minhash work (the banded path does the same; the INDEX side is
-    // deliberately NOT pinned — it is history-sized). One-shot batch
-    // callers keep the localCheckpoint pin; loop callers that must
-    // release the pin per batch (the streaming ingest) pass a
-    // caller-managed persist through [[incrementalNearDupNewSigs]].
-    val newSigs = signatureProjection(newDocs, idCol, textCol, n, indexFamily(index))
-      .localCheckpoint(true)
+    // deliberately NOT pinned — it is history-sized). The returned frame
+    // reads the pin; loops use [[ingestAppend]], which scopes it per step.
+    val newSigs = Pin.cut(signatureProjection(newDocs, idCol, textCol, n, indexFamily(index)))
     incrementalNearDupNewSigs(newSigs, idCol, index, bands, rowsPerBand, simTau, maxBandDf)
   }
 
@@ -412,8 +409,8 @@ object Dedup {
   }
 
   /** A banded index directory is self-describing: the `meta` sidecar is
-    * its marker ([[graft.stream.StreamingOps.nearDupIngestStream]] routes
-    * on this, so one streaming API serves both layouts).
+    * its marker ([[ingestAppend]] routes on this, so one ingest step
+    * serves both layouts).
     */
   def isBandedIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String): Boolean = {
     val p  = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
@@ -535,22 +532,17 @@ object Dedup {
     // the verification join, and the election anti-join (r16 stage probe:
     // ingest ~5 s of which ~3 s was repeated signature work at sf0.1).
     // Batch-bounded by contract, so the pin holds batch rows, never
-    // history. One-shot batch callers keep the localCheckpoint pin; loop
-    // callers that must release the pin per batch ([[ingestAppendBanded]],
-    // the streaming ingest) pass a caller-managed persist through
-    // [[incrementalNearDupNewBandedSigs]] instead.
-    val newSigs = signatureProjection(newDocs, idCol, textCol, n, family).localCheckpoint(true)
+    // history. The returned frame reads the pin; loops use
+    // [[ingestAppend]], which scopes it per step.
+    val newSigs = Pin.cut(signatureProjection(newDocs, idCol, textCol, n, family))
     incrementalNearDupNewBandedSigs(newSigs, idCol, indexDir, meta, simTau, maxBandDf, beforeBatch)
   }
 
   /** [[incrementalNearDupNewBanded]] over a PRE-MATERIALIZED signature
-    * frame (r17): callers that also append the survivors reuse ONE
-    * materialization of the batch's signatures across the ingest joins
-    * and the append write, and own the pin's lifetime (the r16 ADVICE
-    * leak: an in-function localCheckpoint can never be released by the
-    * function, so a long-lived streaming loop accumulated one pinned
-    * batch per micro-batch until RDD GC). `newSigs` must be
-    * [[signatureProjection]] output in the index's own hash family.
+    * frame (r17): [[ingestAppend]] reuses ONE pinned projection of the
+    * batch's signatures across the ingest joins and the append write.
+    * `newSigs` must be [[signatureProjection]] output in the index's own
+    * hash family.
     */
   private[graft] def incrementalNearDupNewBandedSigs(
       newSigs: DataFrame,
@@ -609,79 +601,91 @@ object Dedup {
     electPerDigest(newSigs.join(dropped, Seq("__id"), "left_anti"), idCol)
   }
 
-  /** Append pre-computed survivor signature rows to a banded index —
-    * the [[appendBandedNearDupIndex]] write over sigs the caller already
-    * materialized (r17): `sigs` is the batch's [[signatureProjection]]
-    * and `survivors` the elected (idCol, digest) rows; the appended set
-    * — sigs semi-joined to the survivor ids, id dropped, distinct — is
+  /** Append pre-computed survivor signature rows as generation `batchId`
+    * of either index layout (`meta` is the banded index's, `None` for the
+    * flat one): `sigs` is the batch's [[signatureProjection]] and
+    * `survivors` the elected (idCol, digest) rows; the appended set —
+    * sigs semi-joined to the survivor ids, id dropped, distinct — is
     * row-for-row the set the doc-path append derives by re-running the
     * salted-minhash projection over the survivor documents (the
     * projection is deterministic per doc), without paying that
-    * projection a second time per ingest step.
+    * projection a second time per ingest step. Both writes are
+    * dynamic-partition overwrites of the batch's own generation, so a
+    * crash-replayed batch rewrites its directories instead of appending
+    * duplicate rows.
     */
-  private[graft] def appendBandedSigRows(
+  private def appendSigRows(
       sigs: DataFrame,
       survivors: DataFrame,
       idCol: String,
       indexDir: String,
-      meta: BandedMeta,
-      batchId: Long): Unit =
-    toBandRows(
-      sigs
-        .join(survivors.select(Cols.q(idCol).as("__id")), Seq("__id"), "left_semi")
-        .drop("__id")
-        .distinct(),
-      meta.bands, meta.rowsPerBand, meta.nBuckets)
-      .withColumn("src_batch", lit(batchId))
-      // one task → one file per written directory (see writeBandedNearDupIndex)
-      .repartition(col("band_idx"), col("band_bucket"))
-      .write
-      .partitionBy("src_batch", "band_idx", "band_bucket")
+      meta: Option[BandedMeta],
+      batchId: Long): Unit = {
+    val rows = sigs
+      .join(survivors.select(Cols.q(idCol).as("__id")), Seq("__id"), "left_semi")
+      .drop("__id")
+      .distinct()
+    val (gen, partitions, dir) = meta match {
+      case Some(m) =>
+        // one task → one file per written directory (see writeBandedNearDupIndex)
+        (toBandRows(rows, m.bands, m.rowsPerBand, m.nBuckets)
+          .withColumn("src_batch", lit(batchId))
+          .repartition(col("band_idx"), col("band_bucket")),
+          Seq("src_batch", "band_idx", "band_bucket"), s"$indexDir/bands")
+      case None => (rows.withColumn("src_batch", lit(batchId)), Seq("src_batch"), indexDir)
+    }
+    gen.write
+      .partitionBy(partitions: _*)
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
-      .parquet(s"$indexDir/bands")
+      .parquet(dir)
+  }
 
-  /** One full banded ingest-and-append step — dedup `newDocs` against the
-    * index generations `< batchId` (exactly [[incrementalNearDupNewBanded]]
-    * with `beforeBatch = Some(batchId)`) and append the survivors'
-    * signatures as generation `batchId` — sharing ONE materialized
-    * signature projection across the candidate/verification joins AND the
-    * append write (r17: the separate ingest-then-append sequence paid the
-    * salted-minhash projection twice per step, once inside the ingest and
-    * once re-derived from the survivor docs). Both pins are batch-bounded
-    * persists, RELEASED before return; `use` runs while the survivors are
-    * still pinned, for callers that must consume them (e.g. the streaming
-    * loop's survivor-docs write) without re-executing the election.
+  /** One full ingest-and-append step over either index layout (picked
+    * with [[isBandedIndex]]; `bands` and `rowsPerBand` apply to the flat
+    * layout only, a banded index carries its own in the meta sidecar) —
+    * dedup `newDocs` against the index generations `< batchId` and append
+    * the survivors' signatures as generation `batchId`, sharing ONE
+    * pinned signature projection across the candidate/verification joins
+    * AND the append write (r17: the separate ingest-then-append sequence
+    * paid the salted-minhash projection twice per step). Both pins are
+    * scoped to the step; `use` runs while the survivors are still pinned,
+    * for callers that must consume them (e.g. the streaming loop's
+    * survivor-docs write) without re-executing the election.
     */
-  def ingestAppendBanded(
+  def ingestAppend(
       newDocs: DataFrame,
       idCol: String,
       textCol: String,
       indexDir: String,
       batchId: Long,
+      bands: Int = 4,
+      rowsPerBand: Int = 4,
       simTau: Double = 0.75,
       maxBandDf: Option[Long] = Some(DefaultMaxShingleDf))(
       use: DataFrame => Unit = _ => ()): Unit = {
-    val spark  = newDocs.sparkSession
-    val meta   = readBandedMeta(spark, indexDir)
-    val n      = meta.bands * meta.rowsPerBand
-    val family = indexFamily(spark.read.parquet(s"$indexDir/bands"))
-    val sigs = signatureProjection(newDocs, idCol, textCol, n, family)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val survivors =
-        incrementalNearDupNewBandedSigs(
-          sigs, idCol, indexDir, meta, simTau, maxBandDf, beforeBatch = Some(batchId))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+    val spark = newDocs.sparkSession
+    val meta  = if (isBandedIndex(spark, indexDir)) Some(readBandedMeta(spark, indexDir)) else None
+    val index = spark.read.parquet(if (meta.isDefined) s"$indexDir/bands" else indexDir)
+    val n     = meta.fold(bands * rowsPerBand)(m => m.bands * m.rowsPerBand)
+    Pin.scoped(signatureProjection(newDocs, idCol, textCol, n, indexFamily(index))) { sigs =>
+      val elected = meta match {
+        case Some(m) =>
+          incrementalNearDupNewBandedSigs(
+            sigs, idCol, indexDir, m, simTau, maxBandDf, beforeBatch = Some(batchId))
+        case None =>
+          incrementalNearDupNewSigs(sigs, idCol, index.where(col("src_batch") < batchId),
+            bands, rowsPerBand, simTau, maxBandDf)
+      }
+      Pin.scoped(elected) { survivors =>
         // the caller's consumer runs FIRST (the streaming loop writes the
         // survivor docs before touching the index — on a crash between
         // the two writes the replayed batch sees the pre-append index via
-        // the beforeBatch guard and reproduces the same survivors)
+        // the batch-id guard and reproduces the same survivors)
         use(survivors)
-        appendBandedSigRows(sigs, survivors, idCol, indexDir, meta, batchId)
-      } finally survivors.unpersist(false)
-    } finally sigs.unpersist(false)
+        appendSigRows(sigs, survivors, idCol, indexDir, meta, batchId)
+      }
+    }
   }
 
   /** Deterministic MinHash signatures: `nSigs` salted min-md5 hash

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.core.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -20,9 +21,9 @@ import org.apache.spark.sql.functions._
   *  - rounds = O(component diameter), and near-dup graphs are
   *    short-diameter (dup groups are near-cliques), so the loop
   *    terminates in a handful of rounds;
-  *  - each round `localCheckpoint`s the label table, cutting lineage so
-  *    the plan does not grow with iterations (same pattern as
-  *    [[IvfIndex]]'s index materialization);
+  *  - each round cuts the label table ([[graft.core.Pin.cut]]) so the
+  *    plan does not grow with iterations, and releases the round it
+  *    supersedes;
   *  - convergence is detected with one O(1) count per round (changed
   *    labels), not a collect.
   *
@@ -51,18 +52,16 @@ object DupClusters {
     // Pre-partition by the lookup key `d` before the checkpoint: Dataset
     // checkpoints preserve outputPartitioning, so the per-round label join
     // never re-shuffles the edge table (the big side of the loop).
-    val sym = edges
+    val sym = Pin.cut(edges
       .select(explode(array(
         struct(col("a_id").cast("long").as("s"), col("b_id").cast("long").as("d")),
         struct(col("b_id").cast("long").as("s"), col("a_id").cast("long").as("d")))).as("e"))
       .select(col("e.s").as("s"), col("e.d").as("d"))
-      .repartition(col("d"))
-      .localCheckpoint(true)
+      .repartition(col("d")))
 
-    var labels = vertices
+    var labels = Pin.cut(vertices
       .select(col("id").cast("long").as("id"), col("id").cast("long").as("lbl"))
-      .repartition(col("id"))
-      .localCheckpoint(true)
+      .repartition(col("id")))
 
     var it      = 0
     var changed = 1L
@@ -74,19 +73,20 @@ object DupClusters {
       // the changed-label count piggybacks the checkpoint materialization
       // job as an observed metric — one job per round, not two
       val obs = org.apache.spark.sql.Observation(s"cc_round_${RoundSeq.incrementAndGet()}")
-      val next = labels
+      val next = Pin.cut(labels
         .withColumnRenamed("lbl", "old")
         .join(nbrMin, Seq("id"), "left")
         .select(
           col("id"),
           least(col("old"), coalesce(col("nlbl"), col("old"))).as("lbl"),
           col("old"))
-        .observe(obs, sum(when(col("lbl") =!= col("old"), 1L).otherwise(0L)).as("changed"))
-        .localCheckpoint(true)
+        .observe(obs, sum(when(col("lbl") =!= col("old"), 1L).otherwise(0L)).as("changed")))
       changed = Option(obs.get.getOrElse("changed", null)).map(_.asInstanceOf[Long]).getOrElse(0L)
+      Pin.release(labels)
       labels = next.select("id", "lbl")
       it += 1
     }
+    Pin.release(sym)
     require(changed == 0, s"connectedComponents did not converge in $maxIters rounds")
     labels.select(col("id"), col("lbl").as("cluster_id"))
   }

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.core.Cols
+import graft.core.{Cols, Pin}
 import graft.functions.GraftFunctions.dot
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -177,13 +177,12 @@ object IvfIndex {
     val centroids = trainCentroids(emb, idCol, embCol, cells, iters, seed, sampleRows)
 
     // ONE pass computes per-vector probe cells (nProbe nearest, nearest
-    // first — so element 0 is the home cell). The indexed table is
-    // materialized (localCheckpoint) because both sides of the candidate
-    // self-join derive from it — this IS the inverted index; the
-    // persisted form is [[writeIndex]]'s cell-partitioned table.
-    val indexed = withProbeCells(vecBase(emb, idCol, embCol), centroids, nProbe)
-      .withColumn("cell", col("probe_cells").getItem(0))
-      .localCheckpoint(true)
+    // first — so element 0 is the home cell). The indexed table is cut
+    // because both sides of the candidate self-join derive from it — this
+    // IS the inverted index; the persisted form is [[writeIndex]]'s
+    // cell-partitioned table.
+    val indexed = Pin.cut(withProbeCells(vecBase(emb, idCol, embCol), centroids, nProbe)
+      .withColumn("cell", col("probe_cells").getItem(0)))
 
     val probes = indexed
       .select(

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.core.Jobs
+import graft.core.{Jobs, Pin}
 import graft.model.RunModel
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -59,16 +59,15 @@ object Logit {
     // listwise-exclude NaN as well as null: a NaN feature (0/0 from an
     // upstream ratio) passes isNotNull and would silently poison every Gram
     // sum into NaN coefficients
-    val design = df
+    val complete = df
       .where((rawY +: rawXs).map(c => c.isNotNull && !isnan(c)).reduce(_ && _))
       .select(rawY.as("__y") +: rawXs.zipWithIndex.map { case (x, i) => x.as(s"__x$i") }: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val xs: Seq[Column] = (0 until k).map(i => col(s"__x$i"))
     val y               = col("__y")
 
     var beta = Array.fill(k)(0.0)
     var n    = 0L
-    try for (_ <- 1 to iters) {
+    Pin.scoped(complete)(design => for (_ <- 1 to iters) {
       val eta = xs.zip(beta.toIndexedSeq).map { case (x, b) => x * lit(b) }.reduce(_ + _)
       val p   = lit(1.0) / (lit(1.0) + exp(-eta))
       val w   = p * (lit(1.0) - p) + lit(1e-12)
@@ -89,7 +88,7 @@ object Logit {
       val inv = RunModel.invertSpd(xtx)
       beta = Array.tabulate(k)(i => (0 until k).map(j => inv(i)(j) * xr(j)).sum)
       n = row.getAs[Long]("n")
-    } finally design.unpersist(blocking = false)
+    })
     LogitFit(beta, iters, n)
   }
 

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.core.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -39,7 +40,7 @@ object RetrievalEval {
     *
     * @note EAGER: this method executes the caller's entire retrieval
     *       plan AT CALL TIME (ADVICE r16) — the gold⋈results rank table
-    *       is pinned with an eager localCheckpoint so the upstream
+    *       is cut ([[graft.core.Pin.cut]]) so the upstream
     *       retrieval runs exactly once instead of once per report branch.
     *       Batch inputs only (a checkpoint cannot pin a stream), and the
     *       cost is paid even if the returned report is never consumed.
@@ -57,13 +58,12 @@ object RetrievalEval {
     // passes the full q141 multi-query BM25) re-executes once per branch
     // unless AQE happens to reuse its exchanges. The pinned frame is one
     // row per gold pair — nothing corpus- or result-set-sized.
-    val ranks = gold
+    val ranks = Pin.cut(gold
       .select(col("q_id"), col("gold_id"))
       .join(
         results.select(col("q_id"), col("doc_id").as("gold_id"), col("rn").as("rank")),
         Seq("q_id", "gold_id"),
-        "left")
-      .localCheckpoint(true)
+        "left"))
     val best = ranks.groupBy("q_id").agg(min("rank").as("best"))
     val kdf  = ks.toDF("k")
     val recall = ranks

@@ -2344,7 +2344,7 @@ object TextQueries {
     // survivors and the appended generation are row-identical to the old
     // ingest-then-append-from-docs sequence (the projection is
     // deterministic per doc — oracle replays the whole decision contract)
-    Dedup.ingestAppendBanded(batch0, "doc_id", "text", ixDir, batchId = 0L, simTau = 0.75)()
+    Dedup.ingestAppend(batch0, "doc_id", "text", ixDir, batchId = 0L, simTau = 0.75)()
     Dedup
       .incrementalNearDupNewBanded(
         batch1, "doc_id", "text", ixDir, simTau = 0.75, beforeBatch = Some(1L))

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.core.Pin
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -268,7 +269,7 @@ object Vocab {
     // bigram vocabulary — the same bound the broadcastModel default
     // already assumes fits in memory), so the pin holds the model, never
     // the corpus.
-    val cab = pairsOf(train).groupBy("a", "b").agg(count(lit(1)).as("cab")).localCheckpoint(true)
+    val cab = Pin.cut(pairsOf(train).groupBy("a", "b").agg(count(lit(1)).as("cab")))
     val ca  = cab.groupBy("a").agg(sum("cab").as("ca"))
     val v = train
       .select(explode(split(Cols.q(textCol), " ")).as("tok"))

@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.core.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -341,7 +342,7 @@ object Multimodal {
     // what is materialized is the n×dims feature vectors, never the
     // payloads. decodeFeatures has already validated the id column as
     // integral and emits a long media_id — no lossy re-cast here.
-    val feats = decodeFeatures(media, dims).localCheckpoint(true)
+    val feats = Pin.cut(decodeFeatures(media, dims))
     nearDupFromFeatures(feats, feats.count(), tau, dims, nBits, nTables, nProbes, seed)
   }
 
@@ -495,7 +496,7 @@ object Multimodal {
       // pinning, a 100-media batch decoded 4× (measured in
       // MediaFeatureBench); query batches are serve-sized by the indexed
       // read's own probe-set bound, so materializing them is cheap
-      decodeFeatures(queryMedia, dims).localCheckpoint(true),
+      Pin.cut(decodeFeatures(queryMedia, dims)),
       "media_id", "features", k)
   }
 

@@ -1,6 +1,6 @@
 package graft.na
 
-import graft.core.{Cols, GraftFrame}
+import graft.core.{Cols, GraftFrame, Pin}
 import graft.functions.ProbitFunctions
 import graft.model.RunModel
 import org.apache.spark.sql.{Column, DataFrame}
@@ -42,11 +42,15 @@ import org.apache.spark.sql.types._
   * need reference update semantics (not just the reference distribution)
   * pass `chained = true`.
   *
-  * Scale notes: state between sweeps is one DataFrame; `localCheckpoint`
-  * truncates the growing lineage each sweep. All per-row math is codegen'd
+  * Scale notes: state between sweeps is one DataFrame, cut every five
+  * sweeps; only the save points' pins outlive the loop, because the
+  * snapshots read them. All per-row math is codegen'd
   * projections; the only driver-side state is k×k Gram matrices.
   */
 object Mice {
+
+  /** Sweeps between cuts of the working frame. */
+  private val CheckpointEvery = 5
 
   def apply(
       gf: GraftFrame,
@@ -55,7 +59,6 @@ object Mice {
       nImputations: Int = 10,
       nSpread: Int = 20,
       seed: Long = 42L,
-      checkpointEvery: Int = 5,
       chained: Boolean = false): DataFrame = {
     val df = gf.df
     // booleans participate as 0/1 linear-probability columns in the chained
@@ -98,15 +101,15 @@ object Mice {
     val stats = graft.core.Jobs.collectFast(df.agg(statAggs.head, statAggs.tail: _*))(0)
     val means = numericCols.map(c => c -> stats.getAs[Double](s"__avg_$c")).toMap
     val loHi  = targets.map(c => c -> (stats.getAs[Double](s"__min_$c"), stats.getAs[Double](s"__max_$c"))).toMap
-    var work = df.select(
+    var work = Pin.cut(df.select(
       (Cols.q(rowId) +:
         numericCols.map { c =>
           if (usable.contains(c))
             coalesce(Cols.q(c).cast(DoubleType), lit(means(c))).as(c)
           else Cols.q(c).cast(DoubleType).as(c) // all-null: passes through
         }) ++
-        targets.map(c => Cols.q(c).isNotNull.as(s"__obs_$c")): _*)
-    work = work.localCheckpoint(true)
+        targets.map(c => Cols.q(c).isNotNull.as(s"__obs_$c")): _*))
+    var workSaved = false // a snapshot reads the pin `work` stands on
 
     val totalSweeps = nBurnin + nImputations * nSpread
     val saveAt      = (1 to nImputations).map(i => nBurnin + i * nSpread).toSet
@@ -159,8 +162,12 @@ object Mice {
       // snapshots don't re-execute imputation chains); each un-checkpointed
       // sweep is only a stack of projections, so recompute is cheaper than
       // materializing every round
-      if (sweep % checkpointEvery == 0 || saveAt.contains(sweep))
-        work = work.localCheckpoint(true)
+      if (sweep % CheckpointEvery == 0 || saveAt.contains(sweep)) {
+        val next = Pin.cut(work)
+        if (!workSaved) Pin.release(work)
+        work = next
+        workSaved = saveAt.contains(sweep)
+      }
       if (saveAt.contains(sweep)) {
         val iterIdx = (sweep - nBurnin) / nSpread - 1
         snapshots ::= work.select(

@@ -176,7 +176,7 @@ object PrepQueries {
     */
   val q39Mice: Declared = Declared.rowsOnly("q39_mice") { (spark, dir) =>
     // deterministic 20% sample: the sweep count, not the row count, is the
-    // interesting cost, and each sweep localCheckpoints the working set
+    // interesting cost
     val li = t(spark, dir).lineitem.where(col("l_orderkey") % 5 === 0).select(
       (col("l_orderkey") * 10 + col("l_linenumber")).as("row_id"),
       when(col("l_orderkey") % 17 === 0, lit(null).cast("double"))

@@ -1,5 +1,6 @@
 package graft.stream
 
+import graft.core.Pin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
@@ -318,79 +319,20 @@ object StreamingOps {
       bands: Int = 4,
       rowsPerBand: Int = 4,
       simTau: Double = 0.75): org.apache.spark.sql.streaming.StreamingQuery = {
-    // a BANDED index ([[graft.llm.Dedup.writeBandedNearDupIndex]])
-    // self-describes via its meta sidecar and carries its own bands /
-    // rowsPerBand contract — the params above apply to the flat layout
-    // only. The banded batch path reads just the batch's probed
-    // (band_idx, band_bucket) partitions instead of the whole index.
-    val banded = graft.llm.Dedup.isBandedIndex(docs.sparkSession, indexDir)
-    if (!banded)
-      graft.llm.Dedup.requirePartitionedIndexLayout(docs.sparkSession, indexDir)
+    // the layout is Dedup.ingestAppend's business (a banded index carries
+    // its own bands / rowsPerBand); a pre-partitioned flat index is
+    // refused here, before the stream starts
+    graft.llm.Dedup.requirePartitionedIndexLayout(docs.sparkSession, indexDir)
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val spark = batch.sparkSession
-        val nSigs = bands * rowsPerBand
-        if (banded)
-          // ONE materialized signature projection per batch, shared by the
-          // ingest joins AND the index append, with both pins RELEASED at
-          // the end of the step (r17 — the previous shape local-checkpointed
-          // the signatures inside the ingest call, where the loop could
-          // never free them: one batch-sized pin accumulated per
-          // micro-batch until RDD GC, the r12 lesson this file already
-          // records at the monitored-loop comment below). The survivor-docs
-          // write runs inside `use`, BEFORE the append — on a crash between
-          // the two writes the replayed batch sees the pre-append index via
-          // the beforeBatch guard and reproduces the same survivors.
-          graft.llm.Dedup.ingestAppendBanded(
-            batch.toDF(), idCol, textCol, indexDir, batchId = id, simTau = simTau) { survivors =>
-            batch.toDF()
-              .join(survivors.select(idCol), Seq(idCol), "left_semi")
-              .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-          }
-        else {
-          val index  = spark.read.parquet(indexDir)
-          // the batch's signatures, computed ONCE in the index's hash
-          // family (schema-detected, so a loop over an md5-bootstrapped
-          // index stays md5 end to end) and pinned with a loop-managed
-          // persist: the ingest joins, the survivor-docs write, and the
-          // index append all read this one materialization, and the pin is
-          // released per batch (same r17 lifetime fix as the banded arm)
-          val family = graft.llm.Dedup.indexFamily(index)
-          val sigs = graft.llm.Dedup
-            .signatureProjection(batch.toDF(), idCol, textCol, nSigs, family)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val survivors = graft.llm.Dedup
-              .incrementalNearDupNewSigs(
-                sigs, idCol, index.where(col("src_batch") < id), bands, rowsPerBand, simTau)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              batch.toDF()
-                .join(survivors.select(idCol), Seq(idCol), "left_semi")
-                .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-              // dynamic-partition overwrite of THIS batch's src_batch
-              // partition(s): a crash-replayed batch rewrites the same
-              // directories instead of re-appending duplicate signature
-              // rows, so the index stays O(distinct survivors) across any
-              // number of replays. Survivor signatures come from the pinned
-              // projection (semi-join on the elected ids), not a re-run
-              // over the survivor docs.
-              sigs
-                .join(survivors.select(col(idCol).as("__id")), Seq("__id"), "left_semi")
-                .drop("__id")
-                .distinct()
-                .withColumn("src_batch", lit(id))
-                .write
-                .partitionBy("src_batch")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(indexDir)
-            } finally survivors.unpersist(false)
-          } finally sigs.unpersist(false)
+        graft.llm.Dedup.ingestAppend(batch.toDF(), idCol, textCol, indexDir, batchId = id,
+          bands = bands, rowsPerBand = rowsPerBand, simTau = simTau) { survivors =>
+          batch.toDF()
+            .join(survivors.select(idCol), Seq(idCol), "left_semi")
+            .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
         }
-        ()
       }
       .start()
   }
@@ -617,24 +559,19 @@ object StreamingOps {
             // passes — includes rows from micro-batches still PENDING
             // under Trigger.AvailableNow; baking those into collapsed
             // gen 0 would duplicate them when their own batch later
-            // appends. The id snapshot is eagerly materialized
-            // (localCheckpoint) because the rebuild OVERWRITES the cells
-            // table it would otherwise lazily read mid-write; rebuilds
-            // are the rare path, and the blocks are dropped right after.
-            val ingestedIds = spark.read
+            // appends. The id snapshot is cut because the rebuild
+            // OVERWRITES the cells table it would otherwise lazily read
+            // mid-write; it is released once the rebuild is done.
+            val ingestedIds = Pin.cut(spark.read
               .parquet(s"$indexDir/cells")
               .select(col("vec_id").as(idCol))
-              .distinct()
-              .localCheckpoint(true)
+              .distinct())
             try {
               val ingested = corpus().join(ingestedIds, Seq(idCol), "left_semi")
               frozen = IvfPq.retrainAndRebuild(
                 indexDir, ingested.join(b, Seq(idCol), "left_anti"), idCol, vecCol, dims,
                 nCells, m, k, pqIters, seed, trainOn = ingested)
-            } finally {
-              ingestedIds.unpersist()
-              ()
-            }
+            } finally Pin.release(ingestedIds)
             IvfPq.clearDrift(indexDir, spark)
             val encNew   = IvfPq.encodeForIndexWithError(b, idCol, vecCol, frozen)
             val newStats = encNew.agg(count(lit(1)), avg(col("err"))).collect()(0)

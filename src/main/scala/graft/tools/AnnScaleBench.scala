@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, Pin}
 
 /** Times the AUTO-sized ANN paths (LSH + IVF) against the same corpus the
   * declared q41/q50 queries read with their fixed small-scale parameters —
@@ -75,12 +75,12 @@ object AnnScaleBench {
     locally {
       import org.apache.spark.sql.functions._
       val n = emb.count()
-      val synth = spark
+      // pin values: randn is per-evaluation otherwise
+      val synth = Pin.cut(spark
         .range(0, n, 1, 32)
         .select(
           col("id").as("vec_id"),
-          array((0 until 64).map(i => randn(1000L + i)): _*).as("embedding"))
-        .localCheckpoint(true) // pin values: randn is per-evaluation otherwise
+          array((0 until 64).map(i => randn(1000L + i)): _*).as("embedding")))
       val exactS = graft.llm.BruteForce
         .topK(spark, synth, "vec_id", "embedding", k = 5)
         .select("a_id", "b_id")

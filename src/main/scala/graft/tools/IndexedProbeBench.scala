@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, Pin}
 import graft.functions.GraftFunctions.dot
 import graft.llm.AnnBuckets
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -27,7 +27,7 @@ object IndexedProbeBench {
 
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val n   = emb.count()
-    val queries = emb.where(col("vec_id") % every === 0).localCheckpoint(true)
+    val queries = Pin.cut(emb.where(col("vec_id") % every === 0))
     val nQ      = queries.count()
     println(s"[idxprobe] corpus $dir n=$n queries=$nQ")
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, Pin}
 import graft.llm.AnnBuckets
 import org.apache.spark.sql.functions._
 
@@ -24,10 +24,9 @@ object LshRebuildProbe {
     val batches  = args.lift(2).map(_.toInt).getOrElse(4)
     val spark = GraftSession.local()
 
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val emb = Pin.cut(spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id").cast("long").as("vec_id"),
-        col("embedding").cast("array<double>").as("embedding"))
-      .localCheckpoint(true)
+        col("embedding").cast("array<double>").as("embedding")))
     val n       = emb.count()
     val bootCut = (n * bootFrac).toLong
     println(s"[lsh-rebuild] corpus $dir n=$n bootstrap=$bootCut batches=$batches")

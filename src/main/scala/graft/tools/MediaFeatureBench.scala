@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, Pin}
 import graft.multimodal.Multimodal
 import org.apache.spark.sql.functions._
 
@@ -31,9 +31,7 @@ object MediaFeatureBench {
     val doPairs  = args.contains("--pairs")
     val spark = GraftSession.local()
 
-    val media = Multimodal
-      .mediaFromDocuments(spark.read.parquet(s"$dir/documents.parquet"))
-      .localCheckpoint(true)
+    val media = Pin.cut(Multimodal.mediaFromDocuments(spark.read.parquet(s"$dir/documents.parquet")))
     val n = media.count()
     println(s"[media-feats] corpus $dir n=$n tau=$tau pairs=$doPairs")
 
@@ -57,7 +55,7 @@ object MediaFeatureBench {
       Multimodal.writeMediaIndex(fDir, iDir, spark)
     }
     val decodesAfterBuild = Multimodal.decodeCount.get()
-    val queries = media.limit(100).localCheckpoint(true)
+    val queries = Pin.cut(media.limit(100))
     time("query-vs-corpus search, 100-media batch (searchMediaIndexed)") {
       Multimodal.searchMediaIndexed(iDir, queries).count()
     }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, Pin}
 
 /** Times n-gram Jaccard pair generation CAPPED (the library default,
   * maxShingleDf=1024) vs UNCAPPED (the q34 oracle mode) on the same
@@ -49,10 +49,9 @@ object NgramCapBench {
         import org.apache.spark.sql.functions.col
         // edges materialized once OUTSIDE the timed block → cc_only times
         // the propagation fixpoint alone
-        val edgesCp = graft.llm.Dedup
+        val edgesCp = Pin.cut(graft.llm.Dedup
           .ngramJaccardPairs(docs, "doc_id", "text", minJaccard = Some(0.8))
-          .select("a_id", "b_id")
-          .localCheckpoint(true)
+          .select("a_id", "b_id"))
         println(s"[ngramcap] n_edges=${edgesCp.count()}")
         time("cc_only") {
           graft.llm.DupClusters

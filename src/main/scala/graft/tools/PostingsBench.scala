@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, Pin}
 import graft.llm.Bm25
 import org.apache.spark.sql.functions._
 
@@ -17,11 +17,10 @@ object PostingsBench {
     val dir = args(0)
     val spark = GraftSession.local()
 
-    val docs = spark.read.parquet(s"$dir/documents.parquet").localCheckpoint(true)
-    val queries = docs.where(col("doc_id") % 25 === 0 && col("doc_id") < 5000).select(
+    val docs = Pin.cut(spark.read.parquet(s"$dir/documents.parquet"))
+    val queries = Pin.cut(docs.where(col("doc_id") % 25 === 0 && col("doc_id") < 5000).select(
       col("doc_id").as("q_id"),
-      concat_ws(" ", slice(split(col("text"), " "), 1, 4)).as("q_text"))
-      .localCheckpoint(true)
+      concat_ws(" ", slice(split(col("text"), " "), 1, 4)).as("q_text")))
     println(s"[postings] corpus $dir docs=${docs.count()} queries=${queries.count()}")
 
     def time[T](label: String)(f: => T): T = {

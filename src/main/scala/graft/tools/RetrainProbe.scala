@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, Pin}
 import graft.llm.IvfPq
 import org.apache.spark.sql.functions._
 
@@ -32,10 +32,9 @@ object RetrainProbe {
     val tBoot = (System.nanoTime() - t0) / 1e9
 
     // planted drift generation: shifted copies under fresh ids
-    val drifted = emb.select(
+    val drifted = Pin.cut(emb.select(
       (col("vec_id") + 10000000L).as("vec_id"),
-      transform(col("embedding"), x => x + lit(0.75)).as("embedding"))
-      .localCheckpoint(true)
+      transform(col("embedding"), x => x + lit(0.75)).as("embedding")))
     val t1 = System.nanoTime()
     IvfPq.appendToIndex(ixDir, drifted, "vec_id", "embedding", srcBatch = 1L)
     val tAppend = (System.nanoTime() - t1) / 1e9

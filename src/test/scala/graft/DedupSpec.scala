@@ -451,7 +451,7 @@ class DedupSpec extends AnyFunSuite {
       sA.select("doc_id").join(b0, Seq("doc_id")), "doc_id", "text", dirA, batchId = 0L)
     val dirB = bootstrap()
     var seen: Seq[(Long, String)] = Seq.empty
-    Dedup.ingestAppendBanded(b0, "doc_id", "text", dirB, batchId = 0L, simTau = 0.5) { surv =>
+    Dedup.ingestAppend(b0, "doc_id", "text", dirB, batchId = 0L, simTau = 0.5) { surv =>
       seen = surv.select("doc_id", "digest").as[(Long, String)].collect().toSeq.sorted
     }
     assert(seen == sA.select("doc_id", "digest").as[(Long, String)].collect().toSeq.sorted,

@@ -3,8 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source guard: every CLI and tool builds its session through the one
-  * factory, [[graft.core.GraftSession.local]], and no main source points
-  * at a one-off probe that is no longer in the tree.
+  * factory, [[graft.core.GraftSession.local]], every pin goes through
+  * [[graft.core.Pin]], and no main source points at a one-off probe that
+  * is no longer in the tree.
   */
 class SessionFactoryGuardSpec extends AnyFunSuite {
 
@@ -37,6 +38,14 @@ class SessionFactoryGuardSpec extends AnyFunSuite {
       builder.findAllIn(withoutComments(text)).map(_ => path).toSeq
     }
     assert(sites == Seq("graft/core/Tables.scala"), s"SparkSession builders at: $sites")
+  }
+
+  test("only core/Pin.scala checkpoints, persists or unpersists a frame") {
+    val pinApi = Seq("localCheckpoint(", ".persist(", ".unpersist(", "StorageLevel")
+    val sites = sources.collect {
+      case (path, text) if pinApi.exists(withoutComments(text).contains) => path
+    }
+    assert(sites == Seq("graft/core/Pin.scala"), s"pin calls at: $sites")
   }
 
   test("no main source references a deleted graft.tools probe") {

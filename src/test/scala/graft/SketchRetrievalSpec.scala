@@ -784,11 +784,25 @@ class SketchRetrievalSpec extends AnyFunSuite {
     val stats = dir.resolve("stats")
     org.apache.commons.io.FileUtils.deleteDirectory(stats.toFile)
     java.nio.file.Files.writeString(stats, "not a table")
-    val batch = Seq((6L, "new york pizza")).toDF("doc_id", "text")
+    // a batch big enough that the postings and dfparts writes outlast
+    // the one-row stats write that fails
+    val terms = (0 until 20).map(i => concat(lit("t"), ((col("id") * 31 + i) % 5000).cast("string")))
+    val batch = spark.range(6L, 100006L, 1, 4)
+      .select(col("id").as("doc_id"), concat_ws(" ", terms: _*).as("text"))
+    // the jobs still running when the failure reaches the caller: the
+    // sibling writes must have finished, or the caller's release races them
+    var active = Seq.empty[Int]
     val e = intercept[IllegalStateException] {
-      Bm25.appendToPostings(dir.toString, batch, "doc_id", "text", srcBatch = 1L)
+      try Bm25.appendToPostings(dir.toString, batch, "doc_id", "text", srcBatch = 1L)
+      catch {
+        case t: Throwable =>
+          org.apache.spark.TestBus.drain(spark.sparkContext)
+          active = spark.sparkContext.statusTracker.getActiveJobIds().toSeq
+          throw t
+      }
     }
     assert(e.getMessage.contains("table 'stats'"), e.getMessage)
+    assert(active.isEmpty, s"jobs still running when the write failure surfaced: $active")
   }
 
   test("observed stats sidecar counts null/empty texts exactly like the standalone aggregate (r17)") {

@@ -412,10 +412,14 @@ class StreamingSpec extends AnyFunSuite {
       boot.select("vec_id", "embedding")
         .unionByName(spark.read.parquet(streamDir).select("vec_id", "embedding"))
     def runOnce(): Unit = {
+      val pinned = spark.sparkContext.getPersistentRDDs.keySet
       val q = StreamingOps.ivfPqIngestStreamMonitored(
         StreamingOps.readEmbeddingStream(spark, streamDir, maxFilesPerTrigger = Some(1)),
         ixDir, cp, corpus, tau = 1.15)
       try q.processAllAvailable() finally q.stop()
+      // a rebuild releases its id snapshot: no run leaves a new pin behind
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- pinned
+      assert(left.isEmpty, s"pins left behind by the monitored loop: rdd $left")
     }
     def gens() = spark.read.parquet(s"$ixDir/cells")
       .select(col("src_batch").cast("long")).distinct().as[Long].collect().toSet
@@ -513,10 +517,14 @@ class StreamingSpec extends AnyFunSuite {
       boot.select("vec_id", "embedding")
         .unionByName(spark.read.parquet(streamDir).select("vec_id", "embedding"))
     def runOnce(): Unit = {
+      val pinned = spark.sparkContext.getPersistentRDDs.keySet
       val q = StreamingOps.ivfPqIngestStreamMonitored(
         StreamingOps.readEmbeddingStream(spark, streamDir, maxFilesPerTrigger = Some(1)),
         ixDir, cp, corpus, tau = 1.15)
       try q.processAllAvailable() finally q.stop()
+      // a rebuild releases its id snapshot: no run leaves a new pin behind
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- pinned
+      assert(left.isEmpty, s"pins left behind by the monitored loop: rdd $left")
     }
     // one clean batch establishes the drift baseline
     b1.coalesce(1).write.mode("append").parquet(streamDir)
